@@ -517,6 +517,23 @@ object Bench {
         maxBucket = 1024)
     }))
 
+  /** The bench's one-line JSON from per-pass timings (`None` = the query
+    * threw). Each entry is its min over the passes in whole milliseconds,
+    * printed with 3 decimals (ms resolution is far under the ±30% load band
+    * and keeps the line as small as ~145 entries allow); `value` is the sum
+    * of the printed entries. A query that threw in any pass is listed under
+    * `failed` and is neither timed nor counted in the total.
+    */
+  private[graft] def resultLine(passes: Seq[Map[String, Option[Double]]], sfDir: String): String = {
+    val names = passes.flatMap(_.keys).distinct.sorted
+    val (ok, failed) = names.partition(n => passes.forall(_.get(n).exists(_.isDefined)))
+    val ms = ok.map(n => n -> math.round(passes.map(_(n).get).min * 1000))
+    def fmt(ms: Long): String = java.math.BigDecimal.valueOf(ms, 3).toPlainString
+    val qs = ms.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":${fmt(ms.map(_._2).sum)},"unit":"sec","queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -542,27 +559,22 @@ object Bench {
     // noisy-neighbor spikes otherwise dominate single-shot numbers
     // (observed 4-10x swings on identical plans; with only two passes a
     // spike in either still pollutes the min).
-    def onePass(): Seq[(String, Double)] =
+    def onePass(): Map[String, Option[Double]] =
       benchQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try materialize(fn(spark, sfDir))
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    val p1 = onePass().toMap
-    val p2 = onePass().toMap
-    val results = onePass().map { case (n, v) => n -> Seq(v, p1(n), p2(n)).min }
-    // 3-decimal rounding (ms resolution — far under the ±30% load band)
-    // keeps the one-line JSON as small as ~145 entries allow; the full line
-    // ALSO persists to BENCH_SELF.json in the working directory because a
-    // tail-window capture of stdout truncates the head of a >2 KB line
-    // (r13/r14: the driver's perf comparison came back empty for exactly
-    // this reason). Same numbers, same format, no caching of anything.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.US, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+        try {
+          materialize(fn(spark, sfDir))
+          name -> Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name: ${e.getMessage}")
+          name -> None
+        }
+      }.toMap
+    val line = resultLine(Seq.fill(3)(onePass()), sfDir)
+    // the full line also persists to BENCH_SELF.json in the working
+    // directory: a tail-window capture of stdout truncates the head of a
+    // >2 KB line (r13/r14: the driver's perf comparison came back empty for
+    // exactly this reason)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] BENCH_SELF.json: ${e.getMessage}") }

@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.io.IOException
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
@@ -20,9 +21,14 @@ object Http {
 
   /** POST transport for the batched sink: one JSON-array body per batch.
     * The client is per-JVM lazy (HttpClient is not serializable); `send` is
-    * called from whichever side runs the sink (driver path or executors).
+    * called from whichever side runs the sink (driver threads or executors),
+    * possibly from several threads at once (HttpClient is thread-safe).
+    * Transient failures (I/O errors including a request that outlives
+    * `requestTimeout`, HTTP 429 and 5xx) are retried with exponential
+    * backoff; any other non-2xx status fails at once.
     */
-  final class JsonPostTransport(endpoint: String, maxRetries: Int = 3)
+  final class JsonPostTransport(endpoint: String, maxRetries: Int = 3,
+      requestTimeout: Duration = Duration.ofSeconds(60))
       extends UploadTransport {
     @transient private lazy val client =
       HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
@@ -31,20 +37,22 @@ object Http {
       val body = batch.mkString("[", ",", "]")
       val req = HttpRequest.newBuilder(URI.create(endpoint))
         .header("Content-Type", "application/json")
+        .timeout(requestTimeout)
         .POST(HttpRequest.BodyPublishers.ofString(body))
         .build()
       var attempt = 0
       while (true) {
-        try {
+        val retryable = try {
           val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-          if (resp.statusCode() / 100 == 2) return batch.size
-          throw new RuntimeException(s"HTTP ${resp.statusCode()}: ${resp.body().take(200)}")
-        } catch {
-          case e: Exception =>
-            attempt += 1
-            if (attempt > maxRetries) throw e
-            Thread.sleep(100L << attempt) // 200/400/800ms backoff
-        }
+          val code = resp.statusCode()
+          if (code / 100 == 2) return batch.size
+          val e = new RuntimeException(s"HTTP $code: ${resp.body().take(200)}")
+          if (code != 429 && code / 100 != 5) throw e
+          e
+        } catch { case e: IOException => e }
+        attempt += 1
+        if (attempt > maxRetries) throw retryable
+        Thread.sleep(100L << attempt) // 200/400/800ms backoff
       }
       0 // unreachable
     }
